@@ -91,8 +91,9 @@ where att.attgenerated <> '' and ns.nspname not in ({_in_list(IGNORED_SCHEMAS)})
 
 # Doctor raw scans (reference rust/src/doctor.rs:58-132 computes the whole
 # role closure + nested grant aggregation in one recursive SQL; Spark-first
-# the server only ships the RAW edges/grants — small — and the engine's
-# transitive_closure / doctor aggregation run distributed).
+# the server only ships the RAW edges/grants — small — and the engine walks
+# the collected role edges on the driver and runs the grant aggregation in
+# Spark).
 ROLE_EDGES_SQL = """
 select m.rolname as member, r.rolname as roleof
 from pg_catalog.pg_auth_members am

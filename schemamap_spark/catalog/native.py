@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from schemamap_spark.catalog.base import CatalogAdapter
+from schemamap_spark.session import local_frame
 
 CONSTRAINTS_SCHEMA = T.StructType([
     T.StructField("schema_name", T.StringType()),
@@ -40,7 +41,7 @@ INDEXES_SCHEMA = T.StructType([
 
 class SparkNativeCatalog(CatalogAdapter):
     # relations()/columns() enumerate spark.catalog eagerly into
-    # createDataFrame rows — the returned plan is a snapshot, so engine
+    # local_frame rows — the returned plan is a snapshot, so engine
     # plan memos must not cache it (see CatalogAdapter.materializes_snapshots)
     materializes_snapshots = True
 
@@ -55,22 +56,26 @@ class SparkNativeCatalog(CatalogAdapter):
                              t.description, True, None))
         schema = ("schema_name string, table_name string, object_type string, "
                   "description string, has_usage boolean, approx_rows bigint")
-        return self.spark.createDataFrame(rows, schema)
+        return local_frame(self.spark, rows, schema)
 
     def columns(self) -> DataFrame:
         rows = []
         for db in self.spark.catalog.listDatabases():
             for t in self.spark.catalog.listTables(db.name):
-                for i, c in enumerate(self.spark.catalog.listColumns(t.name, db.name), start=1):
+                # a temp view is listed under every database but resolves
+                # only unqualified: listColumns(name, db) would not find it
+                cols = (self.spark.catalog.listColumns(t.name) if t.isTemporary
+                        else self.spark.catalog.listColumns(t.name, db.name))
+                for i, c in enumerate(cols, start=1):
                     rows.append((db.name, t.name, c.name, c.dataType, not c.nullable,
                                  None, c.description, i))
         schema = ("schema_name string, table_name string, column_name string, "
                   "data_type string, not_null boolean, default_value string, "
                   "column_description string, attnum int")
-        return self.spark.createDataFrame(rows, schema)
+        return local_frame(self.spark, rows, schema)
 
     def constraints(self) -> DataFrame:
-        return self.spark.createDataFrame([], CONSTRAINTS_SCHEMA)
+        return local_frame(self.spark, [], CONSTRAINTS_SCHEMA)
 
     def indexes(self) -> DataFrame:
-        return self.spark.createDataFrame([], INDEXES_SCHEMA)
+        return local_frame(self.spark, [], INDEXES_SCHEMA)

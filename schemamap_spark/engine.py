@@ -143,7 +143,7 @@ class SchemamapEngine:
         # only sound for LAZY adapters (parquet/JDBC scans re-read their
         # source on every action); an adapter that materializes catalog
         # snapshots at plan-build time (SparkNativeCatalog's
-        # createDataFrame of the listed tables) would freeze the table
+        # local_frame of the listed tables) would freeze the table
         # set forever, so those skip the memo entirely (ADVICE r18).
         # refresh() also clears the memo — it is the user's explicit
         # "re-read the catalog" signal.
@@ -158,15 +158,20 @@ class SchemamapEngine:
 
     # --- misc SDK parity ---------------------------------------------------
     def doctor(self, role_edges: DataFrame | None = None, table_grants: DataFrame | None = None) -> dict:
-        """Health report: transitive role closure + nested grant aggregation
-        (reference rust/src/doctor.rs:58-132). Input frames come from the
-        engine's catalog adapter when it exposes role/grant scans (the JDBC
-        adapter pushes the raw pg_auth_members / role_table_grants reads down
-        to the server), else from the repo doctor fixtures."""
+        """Health report: the roles reaching `schemamap` + nested grant
+        aggregation (reference rust/src/doctor.rs:58-132). Input frames come
+        from the engine's catalog adapter when it exposes role/grant scans
+        (the JDBC adapter pushes the raw pg_auth_members / role_table_grants
+        reads down to the server), else from the repo doctor fixtures.
+
+        The role edge list is catalog metadata the size of pg_auth_members,
+        so it is collected once and walked on the driver (`graph.reaching`)
+        instead of running the distributed `transitive_closure`, whose
+        fixpoint costs a few Spark jobs per round to answer one question."""
         import os
 
         from schemamap_spark.catalog.fixture import DEFAULT_FIXTURE_DIR
-        from schemamap_spark.operators.graph import transitive_closure
+        from schemamap_spark.operators.graph import reaching
 
         if role_edges is None:
             if hasattr(self.catalog, "role_edges"):
@@ -183,10 +188,6 @@ class SchemamapEngine:
                     os.path.join(DEFAULT_FIXTURE_DIR, "table_grants.parquet")
                 )
 
-        closure = transitive_closure(role_edges)
-        reaching = (
-            closure.filter(F.col("roleof") == "schemamap").select("member").orderBy("member")
-        )
         grants = (
             table_grants.groupBy("grantee", "privilege_type")
             .agg(F.countDistinct("table_schema", "table_name").alias("table_count"))
@@ -199,7 +200,9 @@ class SchemamapEngine:
             .orderBy("grantee")
         )
         return {
-            "roles_reaching_schemamap": [r.member for r in reaching.collect()],
+            "roles_reaching_schemamap": reaching(
+                role_edges.select("member", "roleof").collect(), "schemamap"
+            ),
             "grants": {r.grantee: dict(r.privileges) for r in grants.collect()},
             "smo_columns": self.smo().count(),
             "installation": self.verify_installation(),

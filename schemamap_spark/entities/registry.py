@@ -19,6 +19,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from schemamap_spark.session import local_frame
+
 _IDENT_RE = re.compile(r"^[a-zA-Z_][a-zA-Z0-9_]*$")
 
 TENANTS_SCHEMA = T.StructType([
@@ -42,7 +44,7 @@ class EntityRegistry:
 
     def list_tenants(self) -> DataFrame:
         if self._tenants_fn is None:
-            return self.spark.createDataFrame([], TENANTS_SCHEMA)
+            return local_frame(self.spark, [], TENANTS_SCHEMA)
         df = self._tenants_fn(self.spark)
         got = [f.name for f in df.schema.fields]
         want = [f.name for f in TENANTS_SCHEMA.fields]
@@ -63,6 +65,4 @@ class EntityRegistry:
         return self._mdes[name](self.spark)
 
     def list_mdes(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [(n,) for n in sorted(self._mdes)], "mde_name string"
-        )
+        return local_frame(self.spark, [(n,) for n in sorted(self._mdes)], "mde_name string")

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from schemamap_spark.imports.states import MigrationState, check_transition
 from schemamap_spark.imports.validation import ColumnRule, validate
 from schemamap_spark.mapping.bidi import BidiMappingRegistry
+from schemamap_spark.session import local_frame
 from schemamap_spark.sources.merge import merge_upsert
 
 
@@ -95,9 +96,7 @@ class ImportPipeline:
     )
 
     def data_migrations(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [tuple(r.values()) for r in self._migrations], self._MIGRATIONS_SCHEMA
-        )
+        return local_frame(self.spark, self._migrations, self._MIGRATIONS_SCHEMA)
 
     def save_migrations(self, path: str) -> None:
         """Persist the bookkeeping table (atomic overwrite)."""

@@ -16,6 +16,8 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from schemamap_spark.session import local_frame
+
 ColumnFn = Callable[[Column], Column]
 
 
@@ -83,7 +85,8 @@ class BidiMappingRegistry:
         return self._rows[name].exact
 
     def to_df(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(m.name, m.i18n, m.forward_fn_name, m.backward_fn_name, m.input_type, m.exact)
              for m in sorted(self._rows.values(), key=lambda m: m.name)],
             "name string, i18n string, forward_fn_name string, backward_fn_name string, "

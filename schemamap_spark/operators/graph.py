@@ -1,8 +1,12 @@
 """Iterative graph operators.
 
-`transitive_closure` is the Spark rendering of the reference doctor's
-`WITH RECURSIVE role_hierarchy` query (reference rust/src/doctor.rs:58-83):
-an iterative frontier-join fixpoint.
+`transitive_closure` is the distributed Spark rendering of the reference
+doctor's `WITH RECURSIVE role_hierarchy` query (reference
+rust/src/doctor.rs:58-83): an iterative frontier-join fixpoint, for edge
+lists too large for the driver (suite q20). The doctor itself asks one
+question of a pg_auth_members-sized edge list, which roles reach
+`schemamap`, and answers it with `reaching`: one collect, then a driver-side
+walk, instead of a few Spark jobs per fixpoint round.
 
 Scale notes:
 - each round is ONE shuffled equi-join on the frontier (which shrinks as the
@@ -79,6 +83,27 @@ def connected_components(
             f"iterations (component diameter too large) — raise max_iterations"
         )
     return labels.select(F.col("node"), F.col("label").alias("group_id"))
+
+
+def reaching(pairs, target) -> list:
+    """Every src with a path of 1..n edges to `target`, over driver-held
+    (src, dst) pairs: the srcs `transitive_closure` pairs with `target`,
+    sorted as `orderBy` sorts them (null first). Walks the edges backwards
+    from `target`; the seen-set makes cycles terminate. A null node ends a
+    path, since the closure's equi-join never matches it."""
+    preds: dict = {}
+    for src, dst in pairs:
+        preds.setdefault(dst, []).append(src)
+    seen: set = set()
+    stack = list(preds.get(target, ()))
+    while stack:
+        node = stack.pop()
+        if node in seen:
+            continue
+        seen.add(node)
+        if node is not None:
+            stack.extend(preds.get(node, ()))
+    return sorted(seen, key=lambda n: (n is not None, n))
 
 
 def transitive_closure(

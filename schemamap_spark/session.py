@@ -8,23 +8,11 @@ uniformly.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-
-# Tables provided by the driver test data (TESTDATA.md).
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+from pyspark.sql import types as T
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -117,7 +105,6 @@ def load_table(
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     # nanosAsLong surfaces nanosecond timestamp columns as bigint; restore a
     # proper timestamp (microsecond floor — Spark's native resolution).
-    from pyspark.sql import types as T
     from pyspark.sql import functions as F
 
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
@@ -130,11 +117,53 @@ def load_table(
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
+# Datetime columns travel through JSON as PySpark's own internal values
+# (`DataType.toInternal`: epoch micros / epoch days) and are rebuilt in SQL,
+# so a naive datetime is read in the process-local zone exactly as
+# `createDataFrame` reads it, whatever the session time zone is.
+_FROM_INTERNAL = {
+    T.TimestampType: ("bigint", "timestamp_micros"),
+    T.DateType: ("int", "date_from_unix_date"),
+}
+_JSON_SAFE = (T.StringType, T.BooleanType, T.IntegralType, T.FloatType, T.DoubleType)
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test-data table as a temp view for spark.sql paths."""
-    for t in TESTDATA_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+def local_frame(
+    spark: SparkSession, rows: list, schema: T.StructType | str
+) -> DataFrame:
+    """A DataFrame over driver-held rows with no Python RDD behind it.
+
+    `createDataFrame(list)` plans a `LogicalRDD` over a Python RDD, so every
+    action on it starts Python workers, even for zero rows. Bookkeeping
+    frames (registries, migration records, catalog listings) are small
+    facts the driver already holds; this ships them to the JVM as ONE JSON
+    text parameter and explodes it there with `inline(from_json(...))`.
+    One parameter keeps planning linear in the row count (a `VALUES` list
+    with a marker per value plans quadratically), and a bound parameter,
+    not spliced SQL text, carries any quoting or unicode verbatim.
+
+    Rows are tuples, dicts or Rows, as for `createDataFrame`. Columns may be
+    strings, booleans, integers, floats, timestamps, dates, or arrays of the
+    non-datetime kinds."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    json_fields, select = [], []
+    for f in schema.fields:
+        name = "`" + f.name.replace("`", "``") + "`"
+        typ = f.dataType
+        elem = typ.elementType if isinstance(typ, T.ArrayType) else typ
+        if type(typ) in _FROM_INTERNAL:
+            json_type, rebuild = _FROM_INTERNAL[type(typ)]
+            select.append(f"{rebuild}({name}) AS {name}")
+        elif isinstance(elem, _JSON_SAFE):
+            json_type = typ.simpleString()
+            select.append(name)
+        else:
+            raise TypeError(f"local_frame: unsupported column type {typ.simpleString()}")
+        json_fields.append(f"{name}: {json_type}")
+    doc = json.dumps([dict(zip(schema.names, schema.toInternal(r))) for r in rows])
+    return spark.sql(
+        f"SELECT {', '.join(select)} FROM "
+        "(SELECT inline(from_json(:doc, :schema, map('mode', 'FAILFAST'))))",
+        args={"doc": doc, "schema": f"array<struct<{', '.join(json_fields)}>>"},
+    )

@@ -25,3 +25,16 @@ def engine(spark):
     from schemamap_spark.catalog import FixtureCatalog
 
     return SchemamapEngine(spark, FixtureCatalog(spark))
+
+
+@pytest.fixture(scope="session")
+def rdd_free():
+    """Predicate: a frame plans no Python-RDD leaf (`LogicalRDD` /
+    `Scan ExistingRDD`), whose every action would start Python workers."""
+
+    def check(df) -> bool:
+        qe = df._jdf.queryExecution()
+        plans = qe.optimizedPlan().toString() + qe.executedPlan().toString()
+        return "LogicalRDD" not in plans and "ExistingRDD" not in plans
+
+    return check

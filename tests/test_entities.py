@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -121,16 +122,17 @@ def test_versioned_bootstrap_applies_once(tmp_path):
     assert store.current() == 3 and len(store.history()) == 3
 
 
-def test_candidates_see_native_catalog_changes(spark):
+def test_candidates_see_native_catalog_changes(spark, rdd_free):
     """ADVICE/VERDICT r18: SparkNativeCatalog's relations()/columns()
-    enumerate the live Spark catalog EAGERLY into createDataFrame plans,
+    enumerate the live Spark catalog EAGERLY into driver-row plans,
     so the engine's candidates plan memo would freeze the table set at
     first call. Such adapters must bypass the memo: a table created
     after the first candidates() call appears in the next one."""
     from schemamap_spark import SchemamapEngine
     from schemamap_spark.catalog import SparkNativeCatalog
 
-    engine = SchemamapEngine(spark, SparkNativeCatalog(spark))
+    native = SparkNativeCatalog(spark)
+    engine = SchemamapEngine(spark, native)
     spark.range(3).toDF("id").createOrReplaceTempView("_tmp_native_probe")
     spark.sql(
         "create table if not exists native_cand_a as select id from _tmp_native_probe"
@@ -140,6 +142,9 @@ def test_candidates_see_native_catalog_changes(spark):
         names1 = {r.table_name for r in first.collect()}
         assert "native_cand_a" in names1
         assert "native_cand_b" not in names1
+        # the listings are driver rows held in the JVM plan, not Python RDDs
+        assert all(rdd_free(f) for f in (native.relations(), native.columns(),
+                                         native.constraints(), native.indexes()))
 
         spark.sql(
             "create table if not exists native_cand_b as "
@@ -163,3 +168,62 @@ def test_candidates_memo_cleared_by_refresh(engine):
     assert engine.master_data_entity_candidates() is c1  # plan reuse
     engine.refresh()
     assert engine.master_data_entity_candidates() is not c1
+
+
+def test_registry_frames_are_jvm_only(spark, rdd_free):
+    """The registries' listings are driver-held facts: their frames must not
+    plan a Python RDD, whose every action starts Python workers."""
+    from schemamap_spark.entities.registry import TENANTS_SCHEMA, EntityRegistry
+
+    reg = EntityRegistry(spark)
+    tenants, mdes = reg.list_tenants(), reg.list_mdes()
+    assert rdd_free(tenants) and rdd_free(mdes)
+    assert tenants.schema == TENANTS_SCHEMA and tenants.collect() == []
+    assert mdes.columns == ["mde_name"] and mdes.isEmpty()
+
+    reg.define_master_data_entity("zeta", lambda s: s.range(1))
+    reg.define_master_data_entity("alpha", lambda s: s.range(1))
+    listed = reg.list_mdes()
+    assert rdd_free(listed)
+    assert [r.mde_name for r in listed.collect()] == ["alpha", "zeta"]
+
+
+def test_local_frame_matches_create_dataframe(spark, monkeypatch, rdd_free):
+    """`local_frame` returns exactly what `createDataFrame` returns — None,
+    quotes, unicode, tz-aware and naive timestamps, dates, arrays — under a
+    non-UTC process zone, where a naive datetime is local wall time (PySpark's
+    `TimestampType.toInternal`), while the session zone stays UTC."""
+    import datetime as dt
+    import time
+
+    from schemamap_spark.session import local_frame
+
+    monkeypatch.setenv("TZ", "America/Sao_Paulo")
+    time.tzset()
+    try:
+        ddl = ("id bigint, s string, ok boolean, ts timestamp, d date, "
+               "keys array<int>, x double")
+        rows = [
+            (1, 'it\'s "quoted" \\ back', True,
+             dt.datetime(2024, 3, 10, 2, 30, 0, 123456), dt.date(1969, 12, 31), [3, 1], 0.1),
+            (2, "ünïcödé ✓ 日本", False,
+             dt.datetime(2024, 7, 1, 12, 0, tzinfo=dt.timezone(dt.timedelta(hours=5, minutes=30))),
+             dt.date(2024, 2, 29), [], -1e300),
+            (3, None, None, None, None, None, None),
+            (4, "", False, dt.datetime(1900, 1, 1, 0, 0, 1), dt.date(1, 1, 1), [None], 0.0),
+        ]
+        got, want = local_frame(spark, rows, ddl), spark.createDataFrame(rows, ddl)
+        assert rdd_free(got)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+        # the stored instants match too, not just their local rendering
+        micros = ["id", "unix_micros(ts) AS us", "unix_date(d) AS days"]
+        assert got.selectExpr(*micros).collect() == want.selectExpr(*micros).collect()
+
+        empty = local_frame(spark, [], ddl)
+        assert empty.schema == want.schema and empty.collect() == []
+        with pytest.raises(TypeError):
+            local_frame(spark, [], "m map<string, int>")
+    finally:
+        monkeypatch.undo()
+        time.tzset()

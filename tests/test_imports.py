@@ -355,3 +355,29 @@ def test_reconcile_attaches_master_ids(spark):
     # the corrupted " ab " names clear nothing at 0.9 -> create-new path
     unmatched = [r for r in rows if r.matched_id is None]
     assert unmatched and all(r.name == " ab " for r in unmatched)
+
+
+def test_bookkeeping_frames_are_jvm_only(spark, rdd_free):
+    """data_migrations() and the bidi registry's to_df() are driver-held
+    bookkeeping: their plans carry the rows in the JVM, with no Python RDD
+    (whose every action, even on zero rows, starts Python workers)."""
+    from schemamap_spark.mapping.bidi import BidiMappingRegistry
+
+    pipe = ImportPipeline(spark)
+    assert rdd_free(pipe.data_migrations()) and pipe.data_migrations().collect() == []
+    mid = pipe._record("orgs", "CSV")
+    pipe._transition(mid, MigrationState.LOAD_FAILED, {"error": "it's \"bad\" — ü"})
+    dm = pipe.data_migrations()
+    assert rdd_free(dm)
+    want = spark.createDataFrame(
+        [tuple(r.values()) for r in pipe._migrations], ImportPipeline._MIGRATIONS_SCHEMA
+    )
+    assert dm.schema == want.schema and dm.collect() == want.collect()
+
+    reg = BidiMappingRegistry()
+    bidi = reg.to_df(spark)
+    assert rdd_free(bidi)
+    assert [(r.name, r.exact) for r in bidi.collect()] == [
+        ("identity", True), ("split_comma_array", True), ("trim_str", False),
+    ]
+    assert bidi.first().i18n == '{"name":{"en":"Identity"}}'

@@ -77,6 +77,13 @@ def test_transitive_closure_model(spark, edges):
             stack.extend(adj.get(n, ()))
     assert got == want
 
+    # the doctor's driver-side walk agrees with the model for every target
+    from schemamap_spark.operators.graph import reaching
+
+    pairs = [(str(a), str(b)) for a, b in edges]
+    for target in {str(i) for i in range(10)}:
+        assert reaching(pairs, target) == sorted(s for s, d in want if d == target)
+
 
 @SET
 @given(

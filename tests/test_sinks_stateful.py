@@ -153,3 +153,24 @@ def test_migrations_persistence(spark, tmp_path):
     rows = pipe2.data_migrations().collect()
     assert len(rows) == 1 and rows[0].state == "IMPORTED"
     assert pipe2._next_id == 2
+
+
+def test_migrations_persistence_large(spark, tmp_path):
+    """2,000 bookkeeping rows round-trip save -> load exactly (states,
+    summaries with quotes and unicode, null imported_at, timestamps)."""
+    from schemamap_spark.imports import ImportPipeline, MigrationState
+
+    pipe = ImportPipeline(spark)
+    for i in range(2000):
+        mid = pipe._record(f"mde_{i % 7}", "CSV" if i % 2 else "XLSX 'ü'")
+        pipe._transition(mid, MigrationState.LOADED)
+        if i % 3:
+            pipe._transition(mid, MigrationState.IMPORTING)
+            pipe._transition(mid, MigrationState.IMPORTED, {"loaded": i, "note": 'a "q" ✓'})
+    path = str(tmp_path / "migrations")
+    pipe.save_migrations(path)
+
+    pipe2 = ImportPipeline(spark)
+    pipe2.load_migrations(path)
+    assert pipe2._next_id == 2001
+    assert pipe2.data_migrations().collect() == pipe.data_migrations().collect()
